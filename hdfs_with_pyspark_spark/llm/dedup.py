@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark.cache import memo, pin
 from hdfs_with_pyspark_spark.llm.textops import (
     MERSENNE31,
     MINHASH_BANDS,
@@ -80,33 +81,17 @@ def dedup_parallelism(spark: SparkSession, n_rows: int) -> int:
     return max(floor, derived)
 
 
-# Spine row counts memoized per (application, semantic plan hash): the
-# auto-partitioning default pays its one column-pruned count per corpus
-# per session, not per operator call (same pattern as similarity's
-# _CORPUS_COUNT_CACHE backing train_ivf_centroids(k=None)). FIFO-bounded
-# so a long-lived service cycling corpora can't accumulate entries.
-_SPINE_ROWS_CACHE: dict[tuple, int] = {}
-_SPINE_ROWS_CACHE_MAX = 32
-
-
 def _spine_token_rows(docs: DataFrame) -> int:
     """Total token occurrences in ``docs`` — the exact row count of the
     shingle spine's one shuffle (posexplode fans each doc to its token
     count). One column-pruned scan summing size(tokens(text)); memoized
-    on the frame's semantic plan hash so repeated dedup calls over the
-    same corpus reuse it."""
-    try:
-        plan_key = docs._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - py4j surface drift fallback
-        plan_key = hash(docs._jdf.queryExecution().analyzed().toString())
-    key = (docs.sparkSession.sparkContext.applicationId, plan_key)
-    if key not in _SPINE_ROWS_CACHE:
-        if len(_SPINE_ROWS_CACHE) >= _SPINE_ROWS_CACHE_MAX:
-            _SPINE_ROWS_CACHE.pop(next(iter(_SPINE_ROWS_CACHE)))
+    on the frame's plan and input files, so the auto-partitioning default
+    pays it once per corpus per session, not per operator call."""
+    def count() -> int:
         n = (docs.select(F.size(tokens(F.col("text"))).alias("nt"))
                  .agg(F.sum("nt").alias("n")).collect()[0]["n"])
-        _SPINE_ROWS_CACHE[key] = int(n or 0)
-    return _SPINE_ROWS_CACHE[key]
+        return int(n or 0)
+    return memo(docs.sparkSession, "spine_token_rows", docs, count)
 
 
 def _auto_spine_partitions(docs: DataFrame) -> int | None:
@@ -1089,19 +1074,15 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output (near-dup-sized) persists because it is consumed twice
     # (its own count + the hit join) — unpersisted, each full pipeline
     # ran twice and the spine materialized twice (r11, guide §1.2).
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
     shh = _shingle_hashes(read_table(spark, sf_dir, "documents"))
-    # ADVICE r11: the corpus-sized spine joins the bounded registry too,
-    # so repeated invocations in a long session release the previous
-    # spine cache instead of accumulating entries.
-    _pin_result(spark, f"dedup_lsh_recall_eval:shh:{sf_dir}", shh)
-    shh = shh.persist()
+    # The corpus-sized spine is pinned too, so repeated invocations in a
+    # long session release the previous spine cache instead of
+    # accumulating entries.
+    shh = pin(spark, f"dedup_lsh_recall_eval:shh:{sf_dir}", shh)
     exact = _jaccard_pairs(shh).select("doc_a", "doc_b")
-    _pin_result(spark, f"dedup_lsh_recall_eval:exact:{sf_dir}", exact)
-    exact = exact.persist()
+    exact = pin(spark, f"dedup_lsh_recall_eval:exact:{sf_dir}", exact)
     lsh = _minhash_lsh_pairs(shh).select("doc_a", "doc_b")
-    _pin_result(spark, f"dedup_lsh_recall_eval:lsh:{sf_dir}", lsh)
-    lsh = lsh.persist()
+    lsh = pin(spark, f"dedup_lsh_recall_eval:lsh:{sf_dir}", lsh)
     n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
     n_lsh = lsh.agg(F.count("*").cast("long").alias("n_lsh_pairs"))
     n_hit = (exact.join(lsh, ["doc_a", "doc_b"])
@@ -1487,9 +1468,7 @@ def minhash_estimate_error_audit(spark: SparkSession,
     # cand feeds BOTH the signature match count (est) and the exact
     # verify (inter) — unpersisted, the band self-join + distinct ran
     # twice (r11, guide §1.2). Near-dup-pair-sized.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"minhash_estimate_error_audit:cand:{sf_dir}", cand)
-    cand = cand.persist()
+    cand = pin(spark, f"minhash_estimate_error_audit:cand:{sf_dir}", cand)
     # Signature match count over the WIDE sig row (no j-explode): one
     # codegen'd sum of K equality terms per candidate pair.
     a_sig = sig.select(F.col("doc_id").alias("doc_a"),
@@ -1564,10 +1543,8 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     cs = (comp.join(src, "doc_id")
               .select("component_id", "source")
-              .distinct()
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "dedup_cross_source_matrix:cs", cs)
+              .distinct())
+    cs = pin(spark, "dedup_cross_source_matrix:cs", cs)
     a = cs.select("component_id", F.col("source").alias("source_a"))
     b = cs.select("component_id", F.col("source").alias("source_b"))
     return (a.join(b, "component_id")

@@ -41,18 +41,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark.cache import memo, pin, pinned
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
-
-def _pin(spark: SparkSession, slot: str, *frames: DataFrame) -> None:
-    """Register persisted intermediates in the bounded per-(session,
-    slot) registry (plans/graph._pin_result): re-invoking the same
-    query in a long session releases the previous invocation's cached
-    frames instead of accumulating them (ADVICE r5)."""
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    for i, f in enumerate(frames):
-        _pin_result(spark, f"{slot}:{i}", f)
 
 N_QUERIES = 10      # vec_id < 10 is the query set
 TOP_K = 5
@@ -453,26 +445,11 @@ def _sql_kmeans(iters: int = KMEANS_ITERS, vcte: str = "v",
 
 _SQL_KMEANS_CTES, _SQL_KMEANS_FINAL = _sql_kmeans()
 
-# Trained centroids are memoized per (application, sf_dir, k, iters): the
-# bench's best-of-N and a mart pipeline's repeated probes reuse one
-# training run, exactly like a reused broadcast. k x dim doubles per
-# entry, FIFO-bounded like spatial._CITY_ROWS_CACHE so a long-lived
-# service cycling applications/corpora can't accumulate entries forever.
-_CENTROID_CACHE: dict[tuple, list] = {}
-_CENTROID_CACHE_MAX = 32
-
-# Corpus counts memoized per (application, sf_dir) so the auto-k default
-# pays its count once per session, not per train call.
-_CORPUS_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CORPUS_COUNT_CACHE:
-        if len(_CORPUS_COUNT_CACHE) >= _CENTROID_CACHE_MAX:
-            _CORPUS_COUNT_CACHE.pop(next(iter(_CORPUS_COUNT_CACHE)))
-        _CORPUS_COUNT_CACHE[key] = _vectors(spark, sf_dir).count()
-    return _CORPUS_COUNT_CACHE[key]
+    """Corpus size, memoized so the auto-k default pays its count once
+    per session and corpus, not per train call."""
+    v = _vectors(spark, sf_dir)
+    return memo(spark, "corpus_count", v, v.count)
 
 
 def train_ivf_centroids(spark: SparkSession, sf_dir: str,
@@ -482,7 +459,7 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str,
 
     ``k=None`` (the public-path default, VERDICT r9 item 1) derives the
     centroid count from the corpus via ivf_auto_k — one cheap
-    column-pruned count, memoized per (application, sf_dir) — so an
+    column-pruned count, memoized per session and corpus — so an
     index built without tuning lands in the flat-query-cost regime the
     25M probe validated instead of the fixed-k recall collapse. Gated
     queries pin ``k=N_CENTROIDS`` explicitly (their oracles unroll that
@@ -498,14 +475,11 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str,
     """
     if k is None:
         k = ivf_auto_k(_corpus_count(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, sf_dir, k, iters)
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    cents = _train_kmeans(_vectors(spark, sf_dir), k, iters)
-    if len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-        _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
-    _CENTROID_CACHE[key] = cents
-    return cents
+    # Memoized: the bench's best-of-N and a mart pipeline's repeated
+    # probes reuse one training run, like a reused broadcast.
+    v = _vectors(spark, sf_dir)
+    return memo(spark, ("ivf_centroids", k, iters), v,
+                lambda: _train_kmeans(v, k, iters))
 
 
 def _train_kmeans(vdf: DataFrame, k: int, iters: int,
@@ -790,15 +764,11 @@ def _pq_codebooks(spark: SparkSession,
     v = _vectors(spark, sf_dir)
     books = []
     for s in range(PQ_SUB):
-        key = (spark.sparkContext.applicationId, sf_dir, "pq", s)
-        if key not in _CENTROID_CACHE:
-            sub = v.select("vec_id",
-                           F.slice("v", s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
-                            .alias("v"))
-            if len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-                _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
-            _CENTROID_CACHE[key] = _train_kmeans(sub, PQ_K, KMEANS_ITERS)
-        books.append(_CENTROID_CACHE[key])
+        sub = v.select("vec_id",
+                       F.slice("v", s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
+                        .alias("v"))
+        books.append(memo(spark, ("pq_codebook", PQ_K, KMEANS_ITERS), sub,
+                          lambda: _train_kmeans(sub, PQ_K, KMEANS_ITERS)))
     return books
 
 
@@ -1105,20 +1075,16 @@ WHERE ROUND({_SQL_COS}, 6) >= {COSINE_DUP_THRESHOLD}
 """)
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    v = _with_norm(_vectors(spark, sf_dir), "v", "nv").persist()
-    _pin(spark, "dedup_embedding_lsh", v)
+    v = pin(spark, "dedup_embedding_lsh:v",
+            _with_norm(_vectors(spark, sf_dir), "v", "nv"))
     return _emb_lsh_axis_pairs(spark, v, "dedup_embedding_lsh:bands")
 
 
 def _emb_lsh_axis_pairs(spark: SparkSession, v: DataFrame,
                         slot: str) -> DataFrame:
     """dedup_embedding_lsh's banded candidate join + exact cosine
-    verify over a PREBUILT persisted (vec_id, v, nv) frame — split out
-    (r12, VERDICT r11 item 1, the _minhash_lsh_pairs discipline) so
-    composers that operate on a restricted vector universe
-    (dedup_method_agreement's shared slice) run the same machinery on
-    their own input instead of re-filtering the full pipeline's output.
-    Same plan as before for dedup_embedding_lsh itself."""
+    verify over a prebuilt persisted (vec_id, v, nv) frame, pinning
+    the bands frame under ``slot``."""
 
     def bucket_col(band: int):
         # try_element_at, not element_at: past-the-end dims are NULL (a
@@ -1134,15 +1100,14 @@ def _emb_lsh_axis_pairs(spark: SparkSession, v: DataFrame,
 
     band_structs = [F.struct(F.lit(k).alias("band"), bucket_col(k).alias("bucket"))
                     for k in range(EMB_LSH_BANDS)]
-    # Persisted like _rand_bands (r12, VERDICT r11 item 1): the bucket
-    # self-join below references bands twice, and unpersisted each side
-    # re-ran the 48-term sign-bit projection over the cached vectors —
-    # the "bands-level share" the rand variant already had. n_vecs x
+    # Pinned like the rand variant's bands: the bucket self-join below
+    # references bands twice, and unpersisted each side re-ran the
+    # 48-term sign-bit projection over the cached vectors. n_vecs x
     # EMB_LSH_BANDS rows of three integers.
-    bands = (v.select("vec_id", F.explode(F.array(*band_structs)).alias("b"))
-              .select("vec_id", "b.band", "b.bucket")
-              .persist())
-    _pin(spark, slot, bands)
+    bands = pin(spark, slot,
+                v.select("vec_id",
+                         F.explode(F.array(*band_structs)).alias("b"))
+                 .select("vec_id", "b.band", "b.bucket"))
     cand = (bands.alias("x")
                  .join(bands.alias("y"),
                        (F.col("x.band") == F.col("y.band"))
@@ -1264,9 +1229,9 @@ def _rand_bands(vecs: DataFrame) -> DataFrame:
     `(0.0 + e1 - e2 ...)` text; the compact tree also keeps the plan
     inside normal codegen limits (the unrolled form generated multi-MB
     Java sources that were re-compiled on every run — measured 8+ s per
-    materialization at sf0.1 against ~0.3 s for this form). The bands
-    frame is persisted: bounded at n_vecs x EMB_LSH_RAND_BANDS rows of
-    three integers, and every caller immediately self-joins it.
+    materialization at sf0.1 against ~0.3 s for this form). Every
+    caller pins the bands frame (n_vecs x EMB_LSH_RAND_BANDS rows of
+    three integers) and immediately self-joins it.
     """
     signs = F.array(*[
         F.array(*[F.lit(1.0 if s > 0 else -1.0) for s in row])
@@ -1292,8 +1257,7 @@ def _rand_bands(vecs: DataFrame) -> DataFrame:
             F.struct(F.lit(k).alias("band"), bucket.alias("bucket")))
     return (withp.select("vec_id",
                          F.explode(F.array(*band_structs)).alias("b"))
-                 .select("vec_id", "b.band", "b.bucket")
-                 .persist())
+                 .select("vec_id", "b.band", "b.bucket"))
 
 
 @register("dedup_embedding_lsh_rand", oracle=f"""
@@ -1314,9 +1278,9 @@ def dedup_embedding_lsh_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     the variant a real >=0.9-threshold corpus should run (see module
     comment; recall measured by emb_lsh_rand_recall)."""
     ensure_session(spark)
-    v = _with_norm(_vectors(spark, sf_dir), "v", "nv").persist()
-    bands = _rand_bands(v)
-    _pin(spark, "dedup_embedding_lsh_rand", v, bands)
+    v = pin(spark, "dedup_embedding_lsh_rand:v",
+            _with_norm(_vectors(spark, sf_dir), "v", "nv"))
+    bands = pin(spark, "dedup_embedding_lsh_rand:bands", _rand_bands(v))
     cand = (bands.alias("x")
                  .join(bands.alias("y"),
                        (F.col("x.band") == F.col("y.band"))
@@ -1395,9 +1359,8 @@ def emb_lsh_rand_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = (vecs.where(F.col("vec_id") % 5 == 0)
                    .select((F.col("vec_id") + EMB_PLANT_OFFSET).alias("vec_id"),
                            F.expr(_SPARK_PLANT_EXPR).alias("v")))
-    aug = vecs.unionByName(planted).persist()
-    bands = _rand_bands(aug)
-    _pin(spark, "emb_lsh_rand_recall", aug, bands)
+    aug = pin(spark, "emb_lsh_rand_recall:aug", vecs.unionByName(planted))
+    bands = pin(spark, "emb_lsh_rand_recall:bands", _rand_bands(aug))
     cand = (bands.alias("x")
                  .join(bands.alias("y"),
                        (F.col("x.band") == F.col("y.band"))
@@ -1490,29 +1453,24 @@ SELECT UNNEST(generate_series(1, {EMBED_DIM})) AS dim,
 FROM v{PC_ITERS}""")
 
 
-# Converged PC weights memoized per (application, sf_dir) — the exact
-# _CENTROID_CACHE discipline (VERDICT r11 item 5): embedding_top_pc and
-# embedding_debias_topc run the SAME deterministic PC_ITERS iteration,
-# so in one session the second consumer (and the bench's best-of-N
-# re-runs) reuses EMBED_DIM driver-side floats instead of re-running
-# PC_ITERS corpus aggregates. FIFO-bounded like _CENTROID_CACHE; a new
-# application id never sees another session's entries.
-_PC_WEIGHTS_CACHE: dict[tuple, list] = {}
-
-
 def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
     """Driver-side PC_ITERS power-iteration loop (unrounded weights).
 
     Shared by embedding_top_pc (publishes the direction) and
     embedding_debias_topc (projects it out). Only EMBED_DIM longs cross
-    to the driver per iteration."""
+    to the driver per iteration. Memoized: both consumers run the SAME
+    deterministic iteration, so in one session the second consumer (and
+    the bench's best-of-N re-runs) reuses EMBED_DIM driver-side floats
+    instead of re-running PC_ITERS corpus aggregates."""
+    corpus = _vectors(spark, sf_dir)
+    return memo(spark, "pc_weights", corpus,
+                lambda: _power_iterate(corpus))
+
+
+def _power_iterate(corpus: DataFrame) -> list[float]:
     import math
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PC_WEIGHTS_CACHE:
-        return _PC_WEIGHTS_CACHE[key]
-
-    vecs = _vectors(spark, sf_dir).select(F.col("v").alias("x")).persist()
+    vecs = corpus.select(F.col("v").alias("x")).persist()
     dims = range(1, EMBED_DIM + 1)
     v = [0.125] * EMBED_DIM
     for _ in range(PC_ITERS):
@@ -1533,9 +1491,6 @@ def _power_iteration_weights(spark: SparkSession, sf_dir: str) -> list[float]:
         nrm = math.sqrt(acc)
         v = [t / nrm for t in ts]
     vecs.unpersist()
-    if len(_PC_WEIGHTS_CACHE) >= _CENTROID_CACHE_MAX:
-        _PC_WEIGHTS_CACHE.pop(next(iter(_PC_WEIGHTS_CACHE)))
-    _PC_WEIGHTS_CACHE[key] = v
     return v
 
 
@@ -1610,8 +1565,7 @@ def _scaled_ivf_assign(spark: SparkSession,
                     / (F.col("nv") * F.col("cnv")), 6)
     w = Window.partitionBy("vec_id").orderBy(F.col("__c").desc(),
                                              F.col("cid").asc())
-    from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
-    assign = _pinned_frame(
+    assign = pinned(
         spark, f"scaled_ivf_assign:{sf_dir}",
         lambda: (v.join(F.broadcast(cent_df), F.lit(True))
                   .select("vec_id", "cid", cos_c.alias("__c"))
@@ -3019,11 +2973,10 @@ def embedding_matryoshka_recall(spark: SparkSession,
     # topk feeds BOTH the full_k and trunc branches; without a persist
     # the broadcast corpus join + ranking windows execute twice per run
     # (ADVICE r6). The frame is |prefixes| x Q x K rows — tiny.
-    topk = (long_form.withColumn("rnk", F.row_number().over(w))
-                     .where(F.col("rnk") <= TOP_K)
-                     .select("p", "qid", "did")
-                     .persist())
-    _pin(spark, "embedding_matryoshka_recall", topk)
+    topk = pin(spark, "embedding_matryoshka_recall",
+               long_form.withColumn("rnk", F.row_number().over(w))
+                        .where(F.col("rnk") <= TOP_K)
+                        .select("p", "qid", "did"))
     full_k = (topk.where(F.col("p") == EMBED_DIM)
                   .select("qid", "did", F.lit(1).alias("hit")))
     trunc = topk.where(F.col("p") != EMBED_DIM)
@@ -3428,16 +3381,15 @@ def ann_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("nv").alias("qnv"), "cid", "probe_rank"))
     # One scoring pass for the nprobe superset; per-level top-K is a
     # filter + rank over this persisted candidate frame.
-    scored = (F.broadcast(probes)
-              .join(assign, "cid")
-              .where(F.col("query_id") != F.col("vec_id"))
-              .select("query_id", "probe_rank",
-                      F.col("vec_id").alias("neighbor_id"),
-                      F.round(F.expr(_sql_dot_cols("qv", "v"))
-                              / (F.col("qnv") * F.col("nv")), 6)
-                       .alias("c"))
-              .persist())
-    _pin(spark, "ann_ivf_nprobe_curve", scored)
+    scored = pin(spark, "ann_ivf_nprobe_curve",
+                 F.broadcast(probes)
+                  .join(assign, "cid")
+                  .where(F.col("query_id") != F.col("vec_id"))
+                  .select("query_id", "probe_rank",
+                          F.col("vec_id").alias("neighbor_id"),
+                          F.round(F.expr(_sql_dot_cols("qv", "v"))
+                                  / (F.col("qnv") * F.col("nv")), 6)
+                           .alias("c")))
     lv = spark.createDataFrame([(p,) for p in IVF_CURVE_PROBES],
                                "nprobe long")
     w_ap = Window.partitionBy("nprobe", "query_id").orderBy(
@@ -3511,19 +3463,13 @@ icent AS (SELECT cid, cv FROM {_INCR_KM_FINAL})"""
 def train_incr_corpus_centroids(
         spark: SparkSession, sf_dir: str) -> list[tuple[int, list[float]]]:
     """Lloyd's over the pre-ingest corpus only (vec_id >= split) —
-    memoized like train_ivf_centroids, keyed separately so the full
-    and corpus-trained quantizers coexist in one session."""
-    key = (spark.sparkContext.applicationId, sf_dir,
-           "incr", INCR_VEC_SPLIT, N_CENTROIDS, KMEANS_ITERS)
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
+    memoized like train_ivf_centroids; the corpus filter is part of the
+    key, so the full and corpus-trained quantizers coexist in one
+    session."""
     corpus = _vectors(spark, sf_dir).where(
         F.col("vec_id") >= INCR_VEC_SPLIT)
-    cents = _train_kmeans(corpus, N_CENTROIDS, KMEANS_ITERS)
-    if len(_CENTROID_CACHE) >= _CENTROID_CACHE_MAX:
-        _CENTROID_CACHE.pop(next(iter(_CENTROID_CACHE)))
-    _CENTROID_CACHE[key] = cents
-    return cents
+    return memo(spark, ("ivf_centroids", N_CENTROIDS, KMEANS_ITERS), corpus,
+                lambda: _train_kmeans(corpus, N_CENTROIDS, KMEANS_ITERS))
 
 
 def _assign_nearest(side: DataFrame, cent_df: DataFrame) -> DataFrame:
@@ -4591,16 +4537,14 @@ def ann_pq_refine_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree; plans/r11/ann_pq_refine_recall_eval_before.txt).
     bf = (ann_topk_bruteforce(spark, sf_dir)
           .select("query_id", "neighbor_id"))
-    _pin(spark, "ann_pq_refine_recall_eval:bf", bf)
-    bf = bf.persist()
+    bf = pin(spark, "ann_pq_refine_recall_eval:bf", bf)
     # ONE ADC-scored pass serves both arms: ann_topk_pq is by
     # construction the rank <= TOP_K prefix of the PQ_REFINE_R
     # shortlist (same scored set, same ordering — _pq_adc_shortlist
     # docstring), so scoring the shortlist once and slicing replaces
     # the eval's former second full PQ pipeline. |queries| x R rows.
     shortlist = _pq_adc_shortlist(spark, sf_dir)
-    _pin(spark, "ann_pq_refine_recall_eval:shortlist", shortlist)
-    shortlist = shortlist.persist()
+    shortlist = pin(spark, "ann_pq_refine_recall_eval:shortlist", shortlist)
     ref = (_exact_rerank_topk(_vectors(spark, sf_dir), shortlist)
            .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
     pq = (shortlist.where(F.col("rank") <= TOP_K)
@@ -4775,17 +4719,14 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared = (_vectors(spark, sf_dir).select(F.col("vec_id").alias("id"))
               .join(read_table(spark, sf_dir, "documents")
                     .select(F.col("doc_id").alias("id")), "id"))
-    _pin(spark, "dedup_method_agreement:shared", shared)
-    shared = shared.persist()
+    shared = pin(spark, f"dedup_method_agreement:shared:{sf_dir}", shared)
     # ONE shingle spine feeds both the MinHash pipeline and the
     # embedding-only verify's inverted index below (r11): composing
     # dedup_minhash_lsh directly would materialize its own identical
-    # spine — a second corpus scan + spine shuffle. Registered in the
-    # bounded pin registry (ADVICE r11) so long sessions don't
-    # accumulate spine caches across invocations.
+    # spine — a second corpus scan + spine shuffle. Pinned so long
+    # sessions don't accumulate spine caches across invocations.
     shh = _shingle_hashes(read_table(spark, sf_dir, "documents"))
-    _pin(spark, "dedup_method_agreement:shh", shh)
-    shh = shh.persist()
+    shh = pin(spark, f"dedup_method_agreement:shh:{sf_dir}", shh)
     tp = (_minhash_lsh_pairs(shh)
           .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"),
                   F.round(F.col("jaccard") * 1e6).cast("long")
@@ -4805,8 +4746,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The frame is near-dup-pair-sized, so pinning it is the C1 idiom,
     # not a liberty: one pass per modality, three cache reads.
     u = tp.join(ep, ["id_a", "id_b"], "full_outer")
-    _pin(spark, "dedup_method_agreement:u", u)
-    u = u.persist()
+    u = pin(spark, f"dedup_method_agreement:u:{sf_dir}", u)
 
     both_p = (u.where(F.col("jacc_e6").isNotNull()
                       & F.col("cos_e6").isNotNull())
@@ -4971,8 +4911,7 @@ def ann_ivfpq_refine_recall_eval(spark: SparkSession,
     # ivfpq arm, replacing the former second full IVF+PQ pipeline.
     bf = (ann_topk_bruteforce(spark, sf_dir)
           .select("query_id", "neighbor_id"))
-    _pin(spark, "ann_ivfpq_refine_recall_eval:bf", bf)
-    bf = bf.persist()
+    bf = pin(spark, "ann_ivfpq_refine_recall_eval:bf", bf)
     v = _vectors(spark, sf_dir)
     shortlist = (ivfpq_search(spark, v,
                               train_ivf_centroids(spark, sf_dir,
@@ -4981,8 +4920,7 @@ def ann_ivfpq_refine_recall_eval(spark: SparkSession,
                               top_k=PQ_REFINE_R, kernel="exact")
                  .select("query_id",
                          F.col("neighbor_id").alias("vec_id"), "rank"))
-    _pin(spark, "ann_ivfpq_refine_recall_eval:shortlist", shortlist)
-    shortlist = shortlist.persist()
+    shortlist = pin(spark, "ann_ivfpq_refine_recall_eval:shortlist", shortlist)
     ref = (_exact_rerank_topk(v, shortlist)
            .select("query_id", "neighbor_id", F.lit(1).alias("__hit")))
     pq = (shortlist.where(F.col("rank") <= TOP_K)

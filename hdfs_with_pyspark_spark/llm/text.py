@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark.cache import pin, pinned
 from hdfs_with_pyspark_spark.llm.textops import (
     BPE_REGEX,
     MERSENNE31,
@@ -1676,9 +1677,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference re-ran the full tokenize + aggregate pass (r11, guide
     # §1.2: with tf2's own pass that was three corpus tokenizations).
     # One row.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"bm25_topk:stats:{sf_dir}", stats)
-    stats = stats.persist()
+    stats = pin(spark, f"bm25_topk:stats:{sf_dir}", stats)
     def _tf(t: str):
         # closure, not a default-arg lambda: a 2-parameter lambda would
         # be read by Spark as the (element, index) signature
@@ -2137,10 +2136,8 @@ def quality_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.count("*").alias("n_docs"),
                F.sum("keep").alias("n_keep"),
                F.expr("(1000000 * sum(keep)) div count(*)")
-                .alias("keep_rate_ppm"))
-          .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_disparate_impact:src_agg", s)
+                .alias("keep_rate_ppm")))
+    s = pin(spark, "quality_disparate_impact:src_agg", s)
     m = s.agg(F.max("keep_rate_ppm").alias("best"))
     return (s.crossJoin(F.broadcast(m))
              .select("source",
@@ -2557,10 +2554,8 @@ def tokenizer_vocab_oov_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = (docs.select("source", F.explode(tokens(F.col("text")))
                                  .alias("tok"))
               .groupBy("source", "tok")
-              .agg(F.count("*").alias("cnt"))
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "tokenizer_vocab_oov_audit:st", st)
+              .agg(F.count("*").alias("cnt")))
+    st = pin(spark, "tokenizer_vocab_oov_audit:st", st)
     vocab = (st.groupBy("tok").agg(F.sum("cnt").alias("c"))
                .orderBy(F.col("c").desc(), F.col("tok").asc())
                .limit(VOCAB_TOP_N)
@@ -2724,9 +2719,8 @@ def quality_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # h is the whole downstream working set (median, MAD, outlier scan
     # all read it) — persist the <= |sources| x 10001-row histogram,
     # never the doc-level frame.
-    h = j.groupBy("source", "qu").agg(F.count("*").alias("f")).persist()
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_outlier_mad:hist", h)
+    h = j.groupBy("source", "qu").agg(F.count("*").alias("f"))
+    h = pin(spark, "quality_outlier_mad:hist", h)
     st = h.groupBy("source").agg(F.sum("f").alias("n"))
     w_c = (Window.partitionBy("source").orderBy("qu")
                  .rangeBetween(Window.unboundedPreceding, Window.currentRow))
@@ -2857,10 +2851,9 @@ def _logreg_fit(spark: SparkSession, sf_dir: str):
 
     # ONE shared pinned frame for train AND infer (ADVICE r9: per-query
     # slots made each evict the other's still-live persist when both run
-    # in a session, e.g. the bench headline set). _pinned_frame returns
+    # in a session, e.g. the bench headline set). pinned() returns
     # the same DataFrame object on reuse, so the cache entry survives.
-    from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
-    f = _pinned_frame(spark, f"quality_logreg:features:{sf_dir}", _build)
+    f = pinned(spark, f"quality_logreg:features:{sf_dir}", _build)
 
     wu = [0, 0, 0]  # nano-grid weights (driver state: 3 longs)
     n = None
@@ -3082,10 +3075,8 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.least(F.expr(
                       "CAST(ROUND(quality_score * 10000) AS BIGINT)"
                       " div 1000"), F.lit(PSI_BINS - 1)).alias("bin")))
-    cnt = (j.groupBy("source", "half", "bin").agg(F.count("*").alias("c"))
-            .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "quality_psi_drift:cnt", cnt)
+    cnt = j.groupBy("source", "half", "bin").agg(F.count("*").alias("c"))
+    cnt = pin(spark, "quality_psi_drift:cnt", cnt)
     n = cnt.groupBy("source", "half").agg(F.sum("c").alias("n"))
     spine = (cnt.select("source").distinct()
                 .crossJoin(F.broadcast(spark.range(PSI_BINS)
@@ -3232,10 +3223,8 @@ def dsir_reweighting_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("b",
                       F.coalesce("n_all", F.lit(0)).alias("n_all"),
                       F.coalesce("n_t", F.lit(0)).alias("n_t"),
-                      F.coalesce("n_sel", F.lit(0)).alias("n_sel"))
-              .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "dsir_reweighting_eval:buckets", g)
+                      F.coalesce("n_sel", F.lit(0)).alias("n_sel")))
+    g = pin(spark, "dsir_reweighting_eval:buckets", g)
     tot = g.agg(F.sum("n_all").alias("s_all"), F.sum("n_t").alias("s_t"),
                 F.sum("n_sel").alias("s_sel"))
     pt = (F.col("n_t") + 1).cast("double") / (F.col("s_t") + nb)
@@ -3330,10 +3319,8 @@ def score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("qu"),
                  F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"))
     h = (j.groupBy("qu").agg(F.count("*").alias("f"),
-                             F.sum("y").alias("pos"))
-          .persist())
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, "score_lift_table:hist", h)
+                             F.sum("y").alias("pos")))
+    h = pin(spark, "score_lift_table:hist", h)
     n = h.agg(F.sum("f").alias("n_total"),
               F.sum("pos").alias("pos_total"))
     w_c = (Window.orderBy(F.col("qu").desc())
@@ -3468,9 +3455,7 @@ def corpus_heldout_bigram_eval(spark: SparkSession,
     # c2 feeds the context rollup c1 AND the scored join — two
     # references, each re-running the bigram explode + count shuffle
     # (r11, guide §1.2). |distinct train bigrams| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"corpus_heldout_bigram_eval:c2:{sf_dir}", c2)
-    c2 = c2.persist()
+    c2 = pin(spark, f"corpus_heldout_bigram_eval:c2:{sf_dir}", c2)
     c1 = (c2.withColumn("ctx", F.split("bg", " ").getItem(0))
             .groupBy("ctx").agg(F.sum("n2").alias("n1")))
     evg = (docs.where(F.col("half") == 1)

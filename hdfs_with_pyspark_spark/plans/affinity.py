@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_with_pyspark_spark.plans.graph import _pinned_frame
+from hdfs_with_pyspark_spark.cache import pinned
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -161,7 +161,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct (order, item) frame is the REDUCED form every stage
     # consumes (frequent-set build + both pair sides) — the C1 persist
     # idiom; narrow two-column cache, one distinct instead of three.
-    items = _pinned_frame(
+    items = pinned(
         spark, f"basket_part_affinity_items:{sf_dir}",
         lambda: (read_table(spark, sf_dir, "lineitem")
                  .select("l_orderkey", "l_partkey")
@@ -174,7 +174,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The frequent-item set is item-sized (tiny) but derives from a full
     # corpus aggregate; pin it so the a-side and b-side joins reuse ONE
     # aggregation instead of re-scanning the corpus per side.
-    freq = _pinned_frame(
+    freq = pinned(
         spark, f"basket_part_affinity_freq:{sf_dir}",
         lambda: (items.groupBy("p_name")
                       .agg(F.count("*").alias("n_item"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hdfs_with_pyspark_spark.cache import pin
 from hdfs_with_pyspark_spark.plans.registry import register, ensure_session
 from hdfs_with_pyspark_spark.sources.io import read_table
 
@@ -1088,9 +1089,7 @@ def seasonal_naive_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds bounds + the priority spine + the fill join — three
     # references, each of which re-ran the orders scan + aggregate
     # (r11, guide §1.2). |priorities| x |days| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"seasonal_naive_eval:daily:{sf_dir}", daily)
-    daily = daily.persist()
+    daily = pin(spark, f"seasonal_naive_eval:daily:{sf_dir}", daily)
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     days = bounds.select(
         F.explode(F.sequence("lo", "hi")).alias("day"))
@@ -1186,9 +1185,7 @@ def events_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uw feeds the cohort aggregate AND the retention join — two
     # references, each re-running the events scan + distinct shuffle
     # (r11, guide §1.2). |users| x |weeks| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"events_user_retention:uw:{sf_dir}", uw)
-    uw = uw.persist()
+    uw = pin(spark, f"events_user_retention:uw:{sf_dir}", uw)
     cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     return (uw.join(cohort, "user_id")
               .groupBy("cohort_week",
@@ -1351,9 +1348,7 @@ def events_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").cast("long").alias("n")))
     # b feeds qi, g AND the dense join — three references, each of which
     # re-ran the corpus shuffle (r11, guide §1.2). |QI| x |decades| rows.
-    from hdfs_with_pyspark_spark.plans.graph import _pin_result
-    _pin_result(spark, f"events_t_closeness:b:{sf_dir}", b)
-    b = b.persist()
+    b = pin(spark, f"events_t_closeness:b:{sf_dir}", b)
     qi = b.groupBy("event_type", "hour_of_day").agg(F.sum("n").alias("n_b"))
     g = b.groupBy("dec").agg(F.sum("n").alias("g_d"))
     tot = g.agg(F.sum("g_d").alias("g"), F.count("*").alias("m"))

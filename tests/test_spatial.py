@@ -149,19 +149,20 @@ def test_nearest_city_tie_breaks_lowest_id(spark):
 
 
 def test_city_cache_bounded_and_clearable(spark):
+    from hdfs_with_pyspark_spark import cache
     from hdfs_with_pyspark_spark.operators import spatial as sp
-    sp.clear_city_cache()
-    assert sp._CITY_ROWS_CACHE == {}
-    for i in range(sp._CITY_ROWS_CACHE_MAX + 5):
+    cache.reset()
+    assert cache._ENTRIES == {}
+    for i in range(cache.MAX_ENTRIES + 5):
         cities = spark.createDataFrame(
             [(i, f"c{i}", float(i % 10), 0.0)],
             "city_id int, city string, city_lat double, city_lon double")
         sp._city_rows(cities)
     # bounded: the memo never exceeds its cap, however many distinct
     # dimensions a long-lived service cycles through
-    assert len(sp._CITY_ROWS_CACHE) <= sp._CITY_ROWS_CACHE_MAX
-    sp.clear_city_cache()
-    assert sp._CITY_ROWS_CACHE == {}
+    assert len(cache._ENTRIES) <= cache.MAX_ENTRIES
+    cache.reset()
+    assert cache._ENTRIES == {}
 
 
 def test_morton_code_known_interleave(spark):
@@ -269,8 +270,8 @@ try:
     def test_gridded_equals_broadcast_property(spark, cities_xy, free_pts,
                                                probe_offs, cell_deg,
                                                n_copies, null_pts):
-        from hdfs_with_pyspark_spark.operators import spatial as sp
-        sp.clear_city_cache()
+        from hdfs_with_pyspark_spark import cache
+        cache.reset()
         cts = spark.createDataFrame(
             [(i, f"c{i}", la, lo) for i, (la, lo) in enumerate(cities_xy)],
             "city_id int, city string, city_lat double, city_lon double")
